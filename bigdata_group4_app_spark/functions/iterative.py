@@ -20,19 +20,47 @@ metrics are exact aggregates over the full checkpointed row set (the
 CollectMetrics node sits above the full plan), not estimates — the loop
 semantics and round counts are bit-identical to the count()-based form.
 
-Plan-capture compatibility: ``scripts/capture_plan_r*.py`` monkey-patch
-``localCheckpoint`` to identity so iterative queries expose their whole
-per-round lineage in one plan.  Under that patch no action fires and
-``Observation.get`` would block forever — so the helper detects the
-patch (a REAL checkpoint's analyzed plan is a ``LogicalRDD``; the
-identity-patched one still shows ``CollectMetrics``) and falls back to
-one explicit count-shaped action, restoring the old per-round cost only
-in capture mode.
+``shuffle_width`` is the one way a loop scopes
+``spark.sql.shuffle.partitions`` down for its small-relation tail: the
+session width is saved, set and restored under one process-wide lock,
+so concurrent scoped loops on a shared session run one at a time and
+the session always returns to the width it had before the scope.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# Re-entrant: a scoped loop may call another scoped helper on the same
+# thread (nested scopes restore LIFO).  Process-wide, not per session:
+# the conf is session state shared by every thread using the session.
+_WIDTH_LOCK = threading.RLock()
+
+
+@contextmanager
+def shuffle_width(spark: SparkSession, n: int) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``
+    and restore the previous width on exit, also when the block raises.
+
+    The lock is held for the whole scope: a second thread entering a
+    scope waits, so it can never save another scope's narrowed width as
+    its "previous" value and leak it to every later query.  Exchanges
+    take their width from the conf at planning time — anything that must
+    run at ``n`` (an eager ``localCheckpoint``, a ``collect``) belongs
+    inside the block.
+    """
+    with _WIDTH_LOCK:
+        prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, prev)
 
 
 def checkpoint_with_metrics(
@@ -48,12 +76,4 @@ def checkpoint_with_metrics(
     """
     obs = Observation()
     out = df.observe(obs, *metrics).localCheckpoint()
-    # A real eager localCheckpoint already ran the materialization action
-    # (analyzed plan = LogicalRDD over the checkpointed partitions).  If a
-    # plan-capture script patched localCheckpoint to identity, the plan
-    # still carries the un-executed CollectMetrics node — fire one
-    # explicit action so Observation.get cannot block forever.
-    analyzed = out._jdf.queryExecution().analyzed()  # type: ignore[attr-defined]
-    if analyzed.getClass().getSimpleName() != "LogicalRDD":
-        out.count()  # capture-mode fallback only (identity checkpoint)
     return out, obs.get

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.iterative import checkpoint_with_metrics
+from ..functions.iterative import checkpoint_with_metrics, shuffle_width
 from ..sources.registry import load_table
 
 PR_DAMPING = 0.85
@@ -502,8 +502,9 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the PageRank loop — each half-step is ONE
     shuffle of the edge relation keyed by the gathering endpoint, the
-    normalizing max is a broadcast scalar, and ``localCheckpoint`` per
-    round truncates the iterative plan. Written exactly as it runs on a
+    normalizing max is observed during the gather's own checkpoint job
+    and injected as a literal, and ``localCheckpoint`` per round
+    truncates the iterative plan. Written exactly as it runs on a
     billion-edge graph.
 
     Cross-engine exactness — STRONGER than the PageRank float
@@ -722,9 +723,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (small, and it only SHRINKS): per-round shuffle width is floor, not
     # data — scope it narrow, restore after (CLAUDE.md iterative-tail
     # rule; the basket mining above already materialized at full width)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with shuffle_width(spark, 4):
         for _ in range(KCORE_ROUNDS):
             if n_cur == 0:
                 break
@@ -750,8 +749,6 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_cur = n_nxt
             if stable:
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         cur.groupBy(F.col("a").alias("part"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -873,9 +870,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.col("label"))
     # the loop relations are edge-sized at most — scope the per-round
     # shuffle width down (CLAUDE.md iterative rule), restore after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_LPA_WIDTH))
-    try:
+    with shuffle_width(spark, _LPA_WIDTH):
         for _ in range(LPA_ROUNDS):
             labels = (
                 sym.join(
@@ -892,8 +887,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
                 .select("v", "label")
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -999,9 +992,7 @@ def bfs_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = reached
     # frontier/reached are node-sized at most — scope the per-round
     # shuffle width down (CLAUDE.md iterative rule), restore after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         for r in range(1, BFS_ROUNDS + 1):
             # frontier size observed during the checkpoint job (round
             # 14: was checkpoint + limit(1).count + a re-checkpoint of
@@ -1021,8 +1012,6 @@ def bfs_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             # beats re-materializing the cumulative set every round
             reached = reached.union(new)
             frontier = new
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     nodes = sym.select(F.col("a").alias("v")).distinct()
     unreached = nodes.join(reached.select("v"), "v", "left_anti").select(
         "v", F.lit(-1).cast("int").alias("d")

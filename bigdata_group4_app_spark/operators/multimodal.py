@@ -30,6 +30,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iterative import shuffle_width
 from ..sources.registry import load_table
 
 MIMES = ("image/png", "audio/wav", "video/mp4")
@@ -637,11 +638,11 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_sig_cands,
         _jaccard_verify,
         _propagate_min_labels,
-        _maybe_persist_shingles,
+        _persist_shingles,
         _shingles,
     )
 
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     sig, cands = _minhash_sig_cands(sh)
     tpairs = (
         _jaccard_verify(cands, sh, sizes=sig.select("doc_id", "n"))
@@ -666,12 +667,8 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # evidenced docs are a tiny relation at any corpus size — per-round
     # shuffle width is pure overhead (the _near_dup_cluster_labels lever)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with shuffle_width(spark, 4):
         labels = _propagate_min_labels(sym)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_docs")
     )

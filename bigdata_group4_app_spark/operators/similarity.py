@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import duck_md5_int, md5_int_sql
+from ..functions.iterative import shuffle_width
 from ..functions.vector_sql import duck_cosine_sql, duck_l2_sql
 from ..sources.registry import load_table
 from .dedup import COSINE_DUP_THRESHOLD, _cosine_expr, _l2_norm_expr
@@ -204,9 +205,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.collect_list(F.struct("k", "ce")).alias("cs"))
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         for _ in range(KMEANS_ROUNDS):
             cent_struct = to_struct(cents)
             # map-side argmin, THEN explode in a separate select (r13,
@@ -227,8 +226,6 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint()
             )
         final_struct = to_struct(cents)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # corpus assignment + query probing both rank against the FINAL
     # (post-round-3) centroids — one broadcast row, map-side
@@ -484,9 +481,7 @@ def _kmeans_assign(spark: SparkSession, sf_dir: str, k: int = KMEANS_K):
         .select("k", "dim", F.round("x", 6).alias("c"))
     )
     rank_expr = _kmeans_ranked_cells_expr()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         assigned = cent_struct = None
         for _ in range(KMEANS_ROUNDS):
             # 1-row table of ALL k centroid arrays: assignment becomes a
@@ -536,8 +531,6 @@ def _kmeans_assign(spark: SparkSession, sf_dir: str, k: int = KMEANS_K):
                 .agg(F.round(F.avg("x"), 6).alias("c"))
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return assigned, cents, cent_struct
 
 
@@ -1833,18 +1826,14 @@ def _semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id_a").alias("doc_id_1"),
         F.col("vec_id_b").alias("doc_id_2"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # the semantic dup graph is CHAINS (measured: 863 edges, 14
     # propagation rounds at sf0.1 — rounds track component diameter,
     # not volume), so per-round fixed cost dominates: width 2 measured
     # fastest (4.2 s vs 5.6 s at near_dup_clusters' width 4; a second
     # pointer jump per round did NOT cut rounds — min labels still
     # travel one EDGE hop per round on chains)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with shuffle_width(spark, 2):
         return _star_components(edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _duck_semantic_survivors_sql() -> str:
@@ -2004,9 +1993,7 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
     # all m×k codeword arrays in ONE broadcast row; assignment is a pure
     # map-side argmin (the kmeans ranked-cells lever, keyed by subspace)
     rank_expr = _pq_ranked_codes_expr("m", "sv")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         assigned = None
         for _ in range(PQ_ROUNDS):
             cent_struct = (
@@ -2045,8 +2032,6 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
                 .agg(F.round(F.avg("x"), 6).alias("c"))
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return subs, assigned, cent_struct
 
 

@@ -273,6 +273,29 @@ def read_minhash_index(spark, state_dir: str, versions: list[int] | None = None)
     )
 
 
+def _check_index_schema(state_dir: str, versions: list[int]) -> None:
+    """Raise unless every parquet file of the given segments carries
+    exactly the pinned index columns. The compaction rewrite reads
+    through ``_SHINGLES_DDL``/``_BANDS_DDL``, which silently prunes any
+    other column, and then retires its inputs — an unlisted column
+    would be lost for good. Reads parquet footers only (no Spark job)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    for member, ddl in (("shingles", _SHINGLES_DDL), ("bands", _BANDS_DDL)):
+        want = {col.split()[0] for col in ddl.split(",")}
+        for v in versions:
+            for path in glob.glob(f"{state_dir}/v{v}/{member}/*.parquet"):
+                got = set(pq.read_schema(path).names)
+                if got != want:
+                    raise ValueError(
+                        f"segment v{v}/{member} has columns {sorted(got)}, "
+                        f"the index schema is {sorted(want)}: refusing to "
+                        "compact (the rewrite would drop or invent columns)"
+                    )
+
+
 def compact_minhash_index(
     spark,
     state_dir: str,
@@ -331,6 +354,12 @@ def compact_minhash_index(
     taken is simply absent from the manifest and stays live — that is
     the normal racing-ingest outcome, not an error.
 
+    Before anything is written, every input segment's parquet footers
+    must match the pinned index schema exactly; a segment with an extra
+    or missing column raises ``ValueError`` and leaves the index as it
+    was (the pinned-schema read would otherwise drop the column and the
+    vacuum would delete its only copy).
+
     Returns the retired version list, or None when fewer than
     ``min_segments`` live segments exist (nothing to do)."""
     import os
@@ -339,6 +368,7 @@ def compact_minhash_index(
     live = _live_versions(state_dir) if input_versions is None else input_versions
     if len(live) < min_segments:
         return None
+    _check_index_schema(state_dir, live)
     sh, bands = read_minhash_index(spark, state_dir, versions=live)
     nxt = _claim_version(state_dir) if claimed_version is None else claimed_version
     sh.write.mode("overwrite").parquet(f"{state_dir}/v{nxt}/shingles")

@@ -725,3 +725,40 @@ def test_cdc_state_survives_crashed_overwrite(spark, tmp_path):
     merge_cdc_state(second, state)
     after = read_cdc_state(spark, state)
     assert after.count() >= len(before)
+
+
+def test_compaction_refuses_segment_with_extra_column(spark, tmp_path):
+    """The compaction rewrite reads through the pinned index schema, so
+    a segment carrying a column the schema does not list would lose it
+    for good once the inputs are retired. Compaction must raise before
+    writing anything and leave every segment live."""
+    import os
+
+    from bigdata_group4_app_spark.streaming.sinks import (
+        _claim_version,
+        _live_versions,
+        compact_minhash_index,
+    )
+
+    state = str(tmp_path / "mh_state")
+    for extra in (False, True):
+        v = _claim_version(state)
+        sh = spark.createDataFrame([(v, 10 + v)], "doc_id bigint, h bigint")
+        if extra:
+            sh = sh.withColumn("lang", F.lit("en"))
+        sh.write.parquet(f"{state}/v{v}/shingles")
+        spark.createDataFrame(
+            [(v, 0, 7)], "doc_id bigint, seed int, mh bigint"
+        ).write.parquet(f"{state}/v{v}/bands")
+        open(os.path.join(state, f"v{v}", "_SUCCESS"), "w").close()
+    assert _live_versions(state) == [0, 1]
+
+    with pytest.raises(ValueError, match="lang"):
+        compact_minhash_index(spark, state)
+    assert _live_versions(state) == [0, 1]
+    assert sorted(os.listdir(state)) == ["v0", "v1"]  # nothing claimed
+    assert spark.read.parquet(f"{state}/v1/shingles").columns == [
+        "doc_id",
+        "h",
+        "lang",
+    ]
